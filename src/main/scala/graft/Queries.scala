@@ -2278,8 +2278,7 @@ object Queries {
       .foreachBatch { (b0: DataFrame, _: Long) =>
         // q147's fused-fold discipline: cache the batch, then ONE
         // applyChangeSet commit per micro-batch (single probe/semi-scan/
-        // rewrite), no emptiness probe (an empty batch folds to a
-        // verbatim no-op commit)
+        // rewrite), no emptiness probe (an empty batch commits nothing)
         val b = b0.persist()
         try {
           val dels = b.filter(col("_change_type") === "delete")
@@ -2360,9 +2359,8 @@ object Queries {
         // ([[graft.core.GraftTable.applyChangeSet]]) instead of a delete
         // commit followed by an upsert commit. No emptiness probe at all:
         // AvailableNow over the CDF source plans only versions that carry
-        // changes, and a hypothetical empty batch folds to a verbatim
-        // no-op commit — content-identical, so the probe was one driver
-        // action per micro-batch buying nothing
+        // changes, and a hypothetical empty batch commits nothing, so
+        // the probe was one driver action per micro-batch buying nothing
         val b = b0.persist()
         try {
           val dels = b.filter(col("_change_type") === "delete")

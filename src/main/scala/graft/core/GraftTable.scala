@@ -702,9 +702,10 @@ object GraftTable {
 
   /** Write `df` into a hidden stage dir, move the part files into `data/`
     * under commit-unique names, and return their manifest entries with
-    * stats. The stats pass re-reads only the staged files (columnar, just
-    * the stats columns) — the post-write pass a format without in-flight
-    * footer aggregation pays; O(batch), never O(table). */
+    * stats; an empty `df` stages no file. The stats pass re-reads only
+    * the staged files (columnar, just the stats columns) — the
+    * post-write pass a format without in-flight footer aggregation pays;
+    * O(batch), never O(table). */
   private def stageFiles(df: DataFrame, path: String, statsCols: Seq[String],
       clusterBy: Option[(Column, Int)], bloomCols: Seq[String] = Nil,
       bucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
@@ -712,7 +713,6 @@ object GraftTable {
     enforceChecks(df, path)
     val commitId = java.util.UUID.randomUUID.toString.take(8)
     val stage = new File(path, ".stage-" + commitId)
-    TableIO.clearDir(stage.toString)
     // a declared `graft.bucketBy` keeps EVERY driver-staged write path
     // (append / upsert / SQL INSERT) single-bucket-per-file — the
     // repartition IS Spark's shuffle assignment, so the id recorded by
@@ -733,23 +733,42 @@ object GraftTable {
         case None => df
       }
     }
-    // timestamps write as standard INT64 micros, never legacy INT96:
-    // INT96 footers carry no usable min/max (the footer-stats fast path
-    // would fall back to a re-read job for every timestamp column), and
-    // micros is what every modern engine (and this format's own readers)
-    // expects. The key is session conf, not a writer option — so the
-    // staged write runs on a cached micros-pinned CLONE of the session
-    // (never a mutate/restore on the user's own conf, which races
-    // concurrent writers and leaks into unrelated writes).
-    org.apache.spark.sql.graftbridge.ClassicBridge.withMicrosTimestampWrites(out)
-      .write.mode("overwrite").parquet(stage.toString)
-    val parts = Option(stage.listFiles).getOrElse(Array.empty[File])
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).sortBy(_.getName)
-    if (parts.isEmpty) { TableIO.clearDir(stage.toString); return Nil }
-    val entries = stagePartEntries(spark, df.schema, path, commitId, parts.toSeq,
-      statsCols, bloomCols, effBucket)
-    TableIO.clearDir(stage.toString)
-    entries
+    // ONE SQL action (one execution id, so the UI and every
+    // QueryExecutionListener see the write) in the caller's own session:
+    // each non-empty task streams its partition into one stage file
+    // through the executor parquet writer
+    // ([[graft.sources.GraftRowFileWriter]]). Its conf pins timestamps to
+    // standard INT64 micros, never legacy INT96 — INT96 footers carry no
+    // usable min/max (the footer-stats fast path would fall back to a
+    // re-read job for every timestamp column) — without touching the
+    // session conf. (A cloned session would run each write under a new
+    // classloader that compiles every generated class again.) The file
+    // names come back from the accepted attempts, never from a listing:
+    // a failed or speculative attempt's file stays out of the manifest
+    // and goes with the stage dir.
+    stage.mkdirs()
+    val stageDir = stage.getAbsolutePath
+    val conf = org.apache.spark.sql.graftbridge.ClassicBridge.parquetWriteConf(spark, out.schema)
+    val qe = out.queryExecution
+    try {
+      val parts = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+          qe, Some(s"graft stage $path")) {
+        qe.sparkSession.sparkContext.runJob(qe.toRdd,
+          (ctx: org.apache.spark.TaskContext,
+              rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+            val w = new graft.sources.GraftRowFileWriter(stageDir, "part",
+              ctx.partitionId(), ctx.taskAttemptId(), conf)
+            // a failing attempt deletes its partial file before it fails
+            try {
+              rows.foreach(w.write)
+              w.commit().asInstanceOf[graft.sources.GraftWrittenFile].file
+            } catch { case t: Throwable => w.abort(); throw t }
+          })
+      }.filter(_.nonEmpty).map(new File(_)).toSeq
+      if (parts.isEmpty) Nil
+      else stagePartEntries(spark, df.schema, path, commitId, parts,
+        statsCols, bloomCols, effBucket)
+    } finally TableIO.clearDir(stage.toString)
   }
 
   /** FOOTER-DERIVED file stats — the zero-job fast path under
@@ -2487,8 +2506,8 @@ object GraftTable {
     // fully-covered files drop without a read; only partially-matching
     // files pay the rewrite (updates rewrite everything they touch)
     val partial = if (dropFullCover) touched.filterNot(covered) else touched
-    // no matching file → the commit carries the file list verbatim (an
-    // empty stage would still emit one zero-row part file)
+    // no matching file → no stage job; the commit carries the file
+    // list verbatim
     val rewritten =
       if (partial.isEmpty) Nil
       else stageFiles(transform(readFileSubset(spark, path, cur, partial)),
@@ -2564,14 +2583,22 @@ object GraftTable {
     * content, and a file holding both a victim and an upsert key
     * rewrites ONCE instead of twice. Idempotent under replays exactly
     * like its two halves. A missing table overwrites with `ins`
-    * (nothing exists to delete), matching [[upsertByKey]]'s bootstrap. */
+    * (nothing exists to delete), matching [[upsertByKey]]'s bootstrap;
+    * a delete-only set creates no table.
+    *
+    * Returns the table's version after the apply: the new version when
+    * it committed, the unchanged current version when the set touched
+    * no file and staged no row (an empty or no-match set commits
+    * nothing), and 0 when the table is missing and `ins` is empty. */
   def applyChangeSet(spark: SparkSession, path: String, delKeys: DataFrame,
       ins: DataFrame, keys: Seq[String], statsCols: Seq[String] = Nil): Long = {
     require(keys.nonEmpty, "need at least one key column")
     val missing = keys.filterNot(delKeys.columns.contains)
     require(missing.isEmpty, s"delete-key frame lacks ${missing.mkString(", ")}")
+    val insMissing = keys.filterNot(ins.columns.contains)
+    require(insMissing.isEmpty, s"insert frame lacks ${insMissing.mkString(", ")}")
     currentManifest(path) match {
-      case None => overwrite(ins, path, statsCols)
+      case None => if (ins.isEmpty) 0L else overwrite(ins, path, statsCols)
       case Some(cur) =>
         require(sameSchema(cur.schemaDdl, ins.schema),
           s"apply schema mismatch vs '$path': table [${cur.schemaDdl}], " +
@@ -2596,7 +2623,8 @@ object GraftTable {
     * (null-safe) appears in `keyFrame`, append `replacement`'s rows if
     * given, rewriting ONLY the files that actually hold a matched key.
     * upsert = (delta keys, append delta); keyed delete = (victim keys,
-    * append nothing). */
+    * append nothing). Returns the committed version, or `cur.version`
+    * when nothing changed. */
   private def cowMerge(spark: SparkSession, path: String, keyFrame: DataFrame,
       replacement: Option[DataFrame], keys: Seq[String], statsCols: Seq[String],
       cur: Manifest, op: String): Long = {
@@ -2662,10 +2690,12 @@ object GraftTable {
         case Some(r) => kept.unionByName(r.select(schema.fieldNames.map(col): _*))
         case None => kept
       }
-      // a no-match delete has nothing to rewrite: carry the file list
-      // verbatim (staging an empty frame would emit a zero-row part file)
+      // a no-match delete has nothing to rewrite, so it skips the stage
+      // job; a change that touches no file and stages no row (an empty
+      // or no-match change set) commits nothing
       val staged = if (touched.isEmpty && replacement.isEmpty) Nil
         else stageFiles(rewritten, path, statsCols, None)
+      if (touched.isEmpty && staged.isEmpty) return cur.version
       val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged,
         cleanLeaves ++ carriedLive.map(_._1))
       val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
@@ -3543,8 +3573,7 @@ object GraftTable {
           // upsert-then-delete pair did — with one probe/semi-scan/
           // commit instead of two and no emptiness probes at all (an
           // empty diff — possible only across metadata-only source
-          // commits — folds to a verbatim no-op commit, content
-          // unchanged)
+          // commits — commits nothing; the mark below still advances)
           applyChangeSet(spark, dstPath, dels, upserts, keys): Unit
         } finally changes.unpersist(): Unit
         setMark(dstPath, id, srcV)

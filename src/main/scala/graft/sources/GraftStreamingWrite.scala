@@ -16,8 +16,8 @@ import graft.core.GraftTable
   * (`writeStream.toTable("graft.ns.t")` — [[graft.catalog.GraftCatalog]]):
   * a genuinely DISTRIBUTED streaming append. Each executor task streams
   * its partition straight into its own staged parquet file (Spark's own
-  * `ParquetWriteSupport` over parquet-mr, bit-compatible with the
-  * driver staging path — [[ClassicBridge.parquetRowWriter]]); the
+  * `ParquetWriteSupport` over parquet-mr, the same writer every staged
+  * GraftTable write uses — [[ClassicBridge.parquetRowWriter]]); the
   * driver-side epoch commit folds the staged files into the manifest
   * through [[GraftTable.commitStreamFiles]] — the same stats/bloom
   * pass, CHECK enforcement, and stream-HWM exactly-once CAS loop as
@@ -81,8 +81,9 @@ private[graft] class GraftStreamWriterFactory(stageDir: String,
     new GraftRowFileWriter(stageDir, s"ep$epochId-r$runId", partitionId, taskId, conf)
 }
 
-/** The per-task writer behind BOTH v2 write surfaces (streaming epochs
-  * and batch INSERTs — [[GraftBatchWriterFactory]]): lazily opens its
+/** The per-task writer behind every staged write (streaming epochs,
+  * batch INSERTs — [[GraftBatchWriterFactory]] — and
+  * [[GraftTable]]'s own staged writes): lazily opens its
   * parquet file on the first row (an empty partition stages nothing),
   * streams rows through Spark's write support (no buffering beyond
   * parquet's own row groups). */

@@ -30,42 +30,15 @@ object ClassicBridge {
     spark.internalCreateDataFrame(rows, data.schema, isStreaming = false)
   }
 
-  /** Re-bind `df`'s (already analyzed) plan to a FRESH clone of its
-    * session whose only divergence is
-    * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS` — so the
-    * driver staging write emits standard INT64-micros timestamps (INT96
-    * footers carry no usable stats) WITHOUT mutating the user's session
-    * conf: a save/set/restore on the shared session races concurrent
-    * writers (the loser's restore clobbers the winner's) and briefly
-    * changes the format of unrelated `df.write.parquet` calls on other
-    * threads. The clone is created per staged write rather than cached:
-    * `cloneSession` copies the CURRENT session conf, so later user
-    * changes (rebase modes, compression codec, ANSI flags) reach every
-    * subsequent staged write, and nothing retains the clone past the
-    * write — a cached clone would both freeze the conf at first use and
-    * pin the parent session's state for the JVM lifetime. The clone
-    * shares the SparkContext and the analyzed plan needs no
-    * re-resolution; its cost is a conf/state copy, noise next to the
-    * write job it fronts. */
-  def withMicrosTimestampWrites(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val classic = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val clone = classic.cloneSession()
-    clone.conf.set(
-      org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
-      "TIMESTAMP_MICROS")
-    org.apache.spark.sql.classic.Dataset.ofRows(clone, df.queryExecution.analyzed)
-  }
-
   // ----------------------------------------------- executor parquet writing
 
   /** A serializable Hadoop conf carrying everything
     * [[org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport]]
     * reads at `init` — the row schema plus the session's parquet write
     * dialect (legacy format, timestamp encoding, rebase modes, zone) —
-    * so an executor-side writer produces files BIT-COMPATIBLE with the
-    * driver's `df.write.parquet` staging path. Built once on the driver,
-    * shipped inside the writer factory. */
+    * so an executor-side writer produces the files `df.write.parquet`
+    * would, bar the timestamp encoding pinned below. Built once on the
+    * driver, shipped inside the writer factory or task closure. */
   def parquetWriteConf(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.util.SerializableConfiguration = {
@@ -77,9 +50,9 @@ object ClassicBridge {
     ParquetWriteSupport.setSchema(schema, conf)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
       sql.writeLegacyParquetFormat.toString)
-    // always standard INT64 micros, never legacy INT96 — matches the
-    // driver staging path (GraftTable.stageFiles forces the same), and
-    // INT96 footers carry no min/max for the footer-stats fast path
+    // always standard INT64 micros, never legacy INT96, whatever the
+    // session's outputTimestampType: INT96 footers carry no min/max for
+    // the footer-stats fast path, and the user's conf stays untouched
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
     conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key,
       sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString)
@@ -96,9 +69,10 @@ object ClassicBridge {
 
   /** An executor-side [[org.apache.parquet.hadoop.ParquetWriter]] of
     * [[org.apache.spark.sql.catalyst.InternalRow]]s — Spark's own write
-    * support over parquet-mr's builder, opened directly by a streaming
-    * `DataWriter` task (no driver round-trip, no shuffle: each task
-    * streams its partition straight to its own file). */
+    * support over parquet-mr's builder, opened directly by a v2
+    * `DataWriter` task or a staged GraftTable write (no driver round-trip,
+    * no shuffle: each task streams its partition straight to its own
+    * file). */
   def parquetRowWriter(conf: org.apache.hadoop.conf.Configuration, file: String)
       : org.apache.parquet.hadoop.ParquetWriter[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.parquet.hadoop.ParquetWriter

@@ -1086,4 +1086,100 @@ class GraftTableSpec extends AnyFunSuite with SparkSpecBase {
     // nothing committed
     assert(GraftTable.currentVersion(path).contains(1L))
   }
+
+  test("an empty or no-match change set commits nothing and stages no file") {
+    val path = tmp() + "/t"
+    GraftTable.overwrite(kv(1 -> "a", 2 -> "b"), path)
+    def state = (GraftTable.currentVersion(path), manifestFiles(path), dataFiles(path).keySet)
+    val before = state
+    assert(GraftTable.applyChangeSet(spark, path, df("k INT"), kv(), Seq("k")) == 1L)
+    GraftTable.applyChangeSet(spark, path, df("k INT", Row(Int.box(99))), kv(), Seq("k")): Unit
+    GraftTable.deleteByKey(spark, path, df("k INT", Row(Int.box(99))), Seq("k")): Unit
+    assert(state == before)
+    assert(GraftTable.currentManifest(path).get.files.forall(_.rows > 0))
+    assert(canon(GraftTable.read(spark, path)) == canon(kv(1 -> "a", 2 -> "b")))
+  }
+
+  test("applyChangeSet requires the keys in ins; a delete-only set creates no table") {
+    val root = tmp()
+    val e = intercept[IllegalArgumentException](GraftTable.applyChangeSet(spark,
+      root + "/t", df("k INT"), df("v STRING", Row("x")), Seq("k")))
+    assert(e.getMessage.contains("insert frame lacks k"))
+    assert(!GraftTable.exists(root + "/t"))
+    val fresh = root + "/fresh"
+    assert(GraftTable.applyChangeSet(spark, fresh,
+      df("k INT", Row(Int.box(1))), kv(), Seq("k")) == 0L)
+    assert(!GraftTable.exists(fresh))
+    assert(!new java.io.File(fresh).exists)
+  }
+
+  test("staged writes run in the caller's session: a repeat append compiles nothing, " +
+      "timestamps stage as INT64 micros, the session conf is untouched") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "INT96")
+    try {
+      val path = tmp() + "/t"
+      // a whole-stage-codegen plan (a local relation would be folded away)
+      def batch = spark.range(0, 3, 1, 1).select(col("id").cast("int").as("k"),
+        timestamp_micros(col("id") * 86400000123L + lit(1704164645123456L)).as("at"))
+      GraftTable.overwrite(batch, path)
+      GraftTable.append(batch, path)
+      val warm = compiles.getCount
+      GraftTable.append(batch, path)
+      assert(compiles.getCount == warm, "a same-shape append recompiled generated code")
+      assert(spark.conf.get(key) == "INT96")
+      val file = new java.io.File(path,
+        GraftTable.currentManifest(path).get.files.last.path)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toURI), new org.apache.hadoop.conf.Configuration()))
+      val at = try reader.getFooter.getFileMetaData.getSchema.getFields.get(1).asPrimitiveType
+        finally reader.close()
+      assert(at.getPrimitiveTypeName == PrimitiveTypeName.INT64)
+      assert(at.getLogicalTypeAnnotation ==
+        LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS))
+      assert(canon(GraftTable.read(spark, path)) ==
+        canon(batch.unionByName(batch).unionByName(batch)))
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a staged write whose task fails once commits exactly the retried attempt's files") {
+    val path = tmp() + "/t"
+    GraftTable.overwrite(kv(0 -> "seed"), path)
+    FlakyTask.failures.set(0)
+    // partition 1's first attempt dies mid-file, after five rows
+    val flaky = udf { (id: Long) =>
+      if (id == 15 && org.apache.spark.TaskContext.get().attemptNumber() == 0) {
+        FlakyTask.failures.incrementAndGet()
+        throw new IllegalStateException("injected task failure")
+      }
+      id.toInt
+    }.asNondeterministic()
+    val rows = spark.range(0, 20, 1, 2)
+      .select(flaky(col("id")).as("k"), concat(lit("v"), col("id")).as("v"))
+    assert(GraftTable.append(rows, path) == 2L)
+    assert(FlakyTask.failures.get == 1, "the injected failure should fire exactly once")
+    val added = GraftTable.currentManifest(path).get.changes.get.added.map(_.path)
+    assert(added.size == 2)
+    assert(added.count(_.contains("-p00000-")) == 1 && added.count(_.contains("-p00001-")) == 1)
+    assert(dataFiles(path).keySet == manifestFiles(path), "an orphan file reached data/")
+    assert(!new java.io.File(path).list().exists(_.startsWith(".stage-")))
+    assert(canon(GraftTable.read(spark, path)) == canon(kv(0 -> "seed")
+      .unionByName(spark.range(0, 20).select(col("id").cast("int").as("k"),
+        concat(lit("v"), col("id")).as("v")))))
+  }
+}
+
+/** Counts the injected failures of the retried-task spec (local mode: the
+  * tasks run in this JVM). */
+object FlakyTask {
+  val failures = new java.util.concurrent.atomic.AtomicInteger
 }

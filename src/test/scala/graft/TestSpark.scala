@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM). Each task
+  * gets two attempts, so a spec can retry a failed task (local mode's
+  * default is one). */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = GraftSession.configure(SparkSession.builder()
-      .master("local[4]"))
+      .master("local[4,2]"))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
