@@ -31,8 +31,7 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * The commit point is a single put-if-absent of `v<N+1>.json`
   * (hard-link creation locally — atomic EEXIST on POSIX; conditional PUT
   * on an object store). Two writers racing the same version: exactly one
-  * wins; [[append]]/[[overwrite]] rebase and retry, [[upsertByKey]]
-  * surfaces `ConcurrentModificationException` (its read-set may be stale).
+  * wins; which ops rebase and which refuse is [[commit]]'s policy table.
   *
   * Why this is the 100 TB shape (vs [[TableIO]]'s rename-swap):
   *  - object-store rename is copy+delete, not atomic — a manifest pointer
@@ -226,8 +225,7 @@ object GraftTable {
     * that reads everything. */
   def describeStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val m = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val m = headOf(path)
     val files = filesOf(path, m)
     StructType.fromDDL(m.schemaDdl).fields.toSeq.map { f =>
       val per = files.flatMap(_.stats.get(f.name))
@@ -245,8 +243,7 @@ object GraftTable {
     * vacuum horizon?" */
   def describeConsumers(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val m = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val m = headOf(path)
     m.streamMarks.getOrElse(Map.empty).toSeq
       .collect { case (k, v) if k.startsWith(ConsumerMarkPrefix) =>
         (k.stripPrefix(ConsumerMarkPrefix), v, m.version, m.version - v) }
@@ -344,6 +341,113 @@ object GraftTable {
     val target = new File(dir, manifestName(m.version))
     try { Files.createLink(target.toPath, tmp.toPath); tmp.delete(); true }
     catch { case _: FileAlreadyExistsException => tmp.delete(); false }
+  }
+
+  /** What one commit changes relative to the head it derives from: the
+    * snapshot's file list as inline entries plus parent leaves carried by
+    * pointer (packed by [[packCommit]]), the schema and the change log.
+    * `checks`, `properties` and `streamMarks` replace the head's when set
+    * (`Some(None)` clears them); unset, the head's carry. */
+  private case class Change(inline: Seq[FileEntry], parentLeaves: Seq[LeafRef],
+      schemaDdl: String, log: ChangeLog,
+      checks: Option[Option[Map[String, String]]] = None,
+      properties: Option[Option[Map[String, String]]] = None,
+      streamMarks: Option[Option[Map[String, Long]]] = None)
+
+  /** A change that keeps `cur`'s files and schema — the base of every
+    * metadata-only commit (checks, properties, stream marks). */
+  private def metadataOnly(cur: Manifest): Change =
+    Change(cur.files, cur.leaves.getOrElse(Nil), cur.schemaDdl, ChangeLog(Nil, Nil))
+
+  /** `head`, or refuse: the op needs an existing table. */
+  private def existing(path: String, head: Option[Manifest]): Manifest =
+    head.getOrElse(throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+
+  private def headOf(path: String): Manifest = existing(path, currentManifest(path))
+
+  /** The snapshot a [[commit]] derives from. */
+  private sealed trait Base
+  /** Re-read the head on every attempt. */
+  private case object Rebase extends Base
+  /** The snapshot the op already read (`None`: the table must not exist). */
+  private case class Pinned(snapshot: Option[Manifest]) extends Base
+
+  /** Test seam: runs once per [[commit]], after the first derive and
+    * before the first CAS — the window a concurrent commit can land in.
+    * Specs use it to stage lost races deterministically. */
+  private[graft] var betweenStageAndCommitForTests: () => Unit = () => ()
+
+  /** The one commit path, in the shape of Delta's OptimisticTransaction:
+    * read the base snapshot, `derive` the change, validate, CAS. `derive`
+    * returns only what the op changes ([[Change]]), or `None` for "no
+    * change": nothing commits and the head's version (0 for no table)
+    * returns. This fills in the version and commit timestamp, carries the
+    * head's stream marks, checks and properties unless the change
+    * overrides them, packs the file list, and — when the head's CHECK set
+    * differs from the `validated` set the staged data already passed —
+    * runs `revalidate` on the head's set once before committing (a
+    * concurrent [[addCheck]] scanned the table it saw, never our
+    * uncommitted stage). A lost CAS either rebases or refuses, per op:
+    *
+    * {{{
+    *   base          ops                                         lost CAS
+    *   Rebase        append, overwrite, writeClustered/Bucketed, rebase: re-read the head,
+    *                 appendEvolve, appendStream,                 derive again, retry
+    *                 commitStreamFiles, commitBatchFiles,
+    *                 replaceFilesCommit, addCheck, dropCheck,
+    *                 analyzeStats, replaceFrom, restore,
+    *                 setMark, set/unsetProperties
+    *   Pinned(Some)  cowMerge (upsert/delete/merge/apply),       ConcurrentModificationException
+    *                 rewriteMatching (predicate COW DML),
+    *                 morDml, applyDeltaCommit, rename/add/drop
+    *                 column, truncate, compactFiles,
+    *                 purgeDeletes
+    *   Pinned(None)  create, convertParquetDir, cloneTable       require failure
+    * }}}
+    *
+    * Rebase ops change something that stays valid on any head: blind
+    * appends and overwrites, metadata edits that re-derive from the head
+    * (a check re-scans it, ANALYZE re-covers it), and row-level replaces
+    * whose derive re-verifies that every file they read is still live
+    * under the same vector. Pinned ops computed their rewrite from rows
+    * of the snapshot they read — a keyed or predicate rewrite, a
+    * relayout, a schema map over every entry — and committing that onto
+    * a different head would resurrect or lose rows, so a lost race
+    * surfaces and the caller re-reads and retries. Creators race only
+    * each other for v1, and the loser fails like an existing table. */
+  private def commit(path: String, op: String, base: Base,
+      validated: Map[String, String] = Map.empty,
+      revalidate: Map[String, String] => Unit = _ => ())(
+      derive: Option[Manifest] => Option[Change]): Long = {
+    @scala.annotation.tailrec
+    def attempt(checked: Map[String, String], first: Boolean): Long = {
+      val head = base match {
+        case Rebase => currentManifest(path)
+        case Pinned(snapshot) => snapshot
+      }
+      derive(head) match {
+        case None => head.fold(0L)(_.version)
+        case Some(c) =>
+          val headChecks = head.flatMap(_.checks).getOrElse(Map.empty)
+          if (headChecks != checked) revalidate(headChecks)
+          val (files, leaves) = packCommit(path, c.inline, c.parentLeaves)
+          val next = Manifest(head.fold(1L)(_.version + 1), commitTs(head), op,
+            c.schemaDdl, files, c.streamMarks.getOrElse(head.flatMap(_.streamMarks)),
+            leaves, Some(c.log), checks = c.checks.getOrElse(head.flatMap(_.checks)),
+            properties = c.properties.getOrElse(head.flatMap(_.properties)))
+          if (first) betweenStageAndCommitForTests()
+          if (tryCommit(path, next)) next.version
+          else base match {
+            case Rebase => attempt(headChecks, first = false)
+            case Pinned(snapshot) =>
+              val msg = s"$op on '$path' lost the commit race for v${next.version} " +
+                "— re-read and retry"
+              require(snapshot.isDefined, msg)
+              throw new java.util.ConcurrentModificationException(msg)
+          }
+      }
+    }
+    attempt(validated, first = true)
   }
 
   // ----------------------------------------------------------- leaf layer
@@ -1094,12 +1198,10 @@ object GraftTable {
     * over the batch when any checks are active, zero cost otherwise;
     * every staged write (append/overwrite/COW rewrite/stream append/
     * evolve) funnels through here. Staging validates the then-current
-    * set; the retry loops RE-validate whenever the rebased head carries
-    * a different set (a concurrent [[addCheck]] scanned the table it
-    * saw, never our uncommitted stage — without the re-check the loser
-    * would attach a check it never ran, and addCheck's whole-table
-    * invariant would be silently false). The COW paths need no loop
-    * guard: any concurrent commit fails them loudly. */
+    * set; [[commit]] RE-validates whenever the head it commits onto
+    * carries a different set (without the re-check the writer would
+    * attach a check it never ran, and addCheck's whole-table invariant
+    * would be silently false). */
   private def enforceChecks(df: DataFrame, path: String): Unit =
     enforceChecks(df, path, activeChecks(path))
 
@@ -1123,11 +1225,6 @@ object GraftTable {
     a == schema.fields.map(f => (f.name, f.dataType)).toSeq
   }
 
-  /** Test seam: runs between staging and the first commit attempt — the
-    * window a concurrent commit (e.g. [[addCheck]]) can land in. The spec
-    * uses it to stage the check-attach race deterministically. */
-  private[graft] var betweenStageAndCommitForTests: () => Unit = () => ()
-
   /** Test seams for the footer-stats fast path: force the job fallback
     * (so the equality spec can produce both paths' manifests from the
     * same data) and observe which path the last stats pass took. */
@@ -1137,57 +1234,53 @@ object GraftTable {
   private def writeOp(df: DataFrame, path: String, op: String, statsCols: Seq[String],
       clusterBy: Option[(Column, Int)], bloomCols: Seq[String] = Nil,
       bucket: Option[(Seq[String], Int)] = None): Long = {
-    var validatedChecks = activeChecks(path)
+    val validated = activeChecks(path)
     val staged = stageFiles(df, path, statsCols, clusterBy, bloomCols, bucket)
-    betweenStageAndCommitForTests()
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        enforceChecks(df, path, curChecks)
-        validatedChecks = curChecks
-      }
-      val (inline, parentLeaves) = op match {
-        case "overwrite" => (staged, Nil)
-        case "append" =>
-          // a rebase that finds the table GONE behind a drop/rename
-          // fence must not quietly re-create it — the overwrite/create
-          // paths reclaim a name deliberately; an append never does
-          if (cur.isEmpty && tombstoned(path))
-            throw new IllegalStateException(
-              s"graft table '$path' was ${tombstoneReason(path)} — append aborted")
-          cur.foreach(m => require(sameSchema(m.schemaDdl, df.schema),
-            s"append schema mismatch vs '$path' v${m.version}: table has " +
-              s"[${m.schemaDdl}], append has [${df.schema.toDDL}] — overwrite to evolve"))
-          (cur.map(_.files).getOrElse(Nil) ++ staged,
-            cur.flatMap(_.leaves).getOrElse(Nil))
-      }
-      val (files, leaves) = packCommit(path, inline, parentLeaves)
-      // append keeps the TABLE's declared schema (the batch conforms to
-      // it; it must not redefine it) — adopting the batch's DDL could
-      // flip an evolved always-nullable column to NOT NULL while old
-      // files still null-fill it, poisoning every consumer that trusts
-      // declared nullability (metadata count(col), join planning).
-      // Nullability only ever WIDENS: a batch that declares a column
-      // nullable relaxes the table's claim.
-      val nextDdl = cur match {
-        case Some(m) if op == "append" =>
-          val batchNullable = df.schema.map(f => f.name -> f.nullable).toMap
-          StructType(StructType.fromDDL(m.schemaDdl).fields.map(f =>
-            f.copy(nullable = f.nullable ||
-              batchNullable.getOrElse(f.name, f.nullable)))).toDDL
-        case _ => df.schema.toDDL
-      }
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L),
-        commitTs(cur), op, nextDdl, files, cur.flatMap(_.streamMarks), leaves,
-        Some(ChangeLog(logEntries(staged), Nil, truncate = op == "overwrite")),
-        checks = cur.flatMap(_.checks), properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
-      // else: another writer took this version — rebase on its snapshot and retry
-    }
-    committed
+    commitWrite(path, op, df.schema, staged, validated, enforceChecks(df, path, _))
   }
+
+  /** Commit `staged` entries as an `append` or an `overwrite` — the body
+    * shared by the driver-staged [[writeOp]] and the executor-staged
+    * [[commitBatchFiles]]. An overwrite replaces the file list (and the
+    * schema). An append keeps the file list and the TABLE's declared
+    * schema and refuses a batch of another schema; an append with no
+    * entries onto an existing table commits nothing. The staged files
+    * are deleted when nothing commits. */
+  private def commitWrite(path: String, op: String, schema: StructType,
+      staged: Seq[FileEntry], validated: Map[String, String],
+      revalidate: Map[String, String] => Unit): Long =
+    try commit(path, op, Rebase, validated, revalidate) { cur =>
+      val log = ChangeLog(logEntries(staged), Nil, truncate = op == "overwrite")
+      if (op == "overwrite") Some(Change(staged, Nil, schema.toDDL, log))
+      else {
+        // a rebase that finds the table GONE behind a drop/rename fence
+        // must not quietly re-create it — the overwrite/create paths
+        // reclaim a name deliberately; an append never does
+        if (cur.isEmpty && tombstoned(path))
+          throw new IllegalStateException(
+            s"graft table '$path' was ${tombstoneReason(path)} — append aborted")
+        cur.foreach(m => require(sameSchema(m.schemaDdl, schema),
+          s"append schema mismatch vs '$path' v${m.version}: table has " +
+            s"[${m.schemaDdl}], append has [${schema.toDDL}] — overwrite to evolve"))
+        cur match {
+          case None => Some(Change(staged, Nil, schema.toDDL, log))
+          case Some(_) if staged.isEmpty => None
+          case Some(m) =>
+            // append keeps the TABLE's declared schema (the batch conforms
+            // to it; it must not redefine it) — adopting the batch's DDL
+            // could flip an evolved always-nullable column to NOT NULL
+            // while old files still null-fill it, poisoning every consumer
+            // that trusts declared nullability (metadata count(col), join
+            // planning). Nullability only ever WIDENS: a batch that
+            // declares a column nullable relaxes the table's claim.
+            val batchNullable = schema.map(f => f.name -> f.nullable).toMap
+            val ddl = StructType(StructType.fromDDL(m.schemaDdl).fields.map(f =>
+              f.copy(nullable = f.nullable ||
+                batchNullable.getOrElse(f.name, f.nullable)))).toDDL
+            Some(Change(m.files ++ staged, m.leaves.getOrElse(Nil), ddl, log))
+        }
+      }
+    } catch { case e: Throwable => staged.foreach(fe => new File(path, fe.path).delete()); throw e }
 
   /** Replace the table's contents (schema may change). Returns the
     * committed version. `bloomCols` adds a per-file bloom filter on those
@@ -1214,10 +1307,10 @@ object GraftTable {
       properties: Map[String, String] = Map.empty): Long = {
     require(schema.nonEmpty, s"CREATE TABLE '$path' needs at least one column")
     require(!exists(path), s"graft table '$path' already exists")
-    val m = Manifest(1L, commitTs(None), "create", schema.toDDL, Nil,
-      properties = if (properties.isEmpty) None else Some(properties))
-    require(tryCommit(path, m), s"graft table '$path' already exists (racing creator won)")
-    1L
+    commit(path, "create", Pinned(None)) { _ =>
+      Some(Change(Nil, Nil, schema.toDDL, ChangeLog(Nil, Nil),
+        properties = Some(Some(properties).filter(_.nonEmpty))))
+    }
   }
 
   /** Schema-EVOLVING append (Delta's mergeSchema, re-derived): the
@@ -1257,10 +1350,8 @@ object GraftTable {
     var stagedAgainst: Option[Option[String]] = None
     var staged: Seq[FileEntry] = Nil
     var stagedDf: DataFrame = df
-    var validatedChecks = activeChecks(path)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
+    commit(path, "append_evolve", Rebase, activeChecks(path),
+        checks => enforceChecks(stagedDf, path, checks)) { cur =>
       val (merged, newCols) = cur match {
         case Some(c) => mergeInto(StructType.fromDDL(c.schemaDdl))
         case None => (df.schema, Nil)
@@ -1270,15 +1361,9 @@ object GraftTable {
           if (df.columns.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         }.toSeq: _*)
-        validatedChecks = activeChecks(path)
         staged = stageFiles(aligned, path, statsCols, None)
         stagedDf = aligned
         stagedAgainst = Some(cur.map(_.schemaDdl))
-      }
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        enforceChecks(stagedDf, path, curChecks)
-        validatedChecks = curChecks
       }
       // pre-existing files route each NEW column to a guaranteed-absent
       // physical name (the addColumn discipline)
@@ -1291,13 +1376,8 @@ object GraftTable {
       val leaves = cur.flatMap(_.leaves).getOrElse(Nil).map { l =>
         if (absent.isEmpty) l else writeLeaf(path, loadLeaf(path, l).map(evolveEntry))
       }
-      val (files, packedLeaves) = packCommit(path, inline, leaves)
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L), commitTs(cur),
-        "append_evolve", merged.toDDL, files, cur.flatMap(_.streamMarks), packedLeaves,
-        Some(ChangeLog(logEntries(staged), Nil)), checks = cur.flatMap(_.checks), properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
+      Some(Change(inline, leaves, merged.toDDL, ChangeLog(logEntries(staged), Nil)))
     }
-    committed
   }
 
   /** EXACTLY-ONCE streaming append: a no-op if `batchId` is at or below
@@ -1311,34 +1391,40 @@ object GraftTable {
   def appendStream(df: DataFrame, path: String, streamId: String, batchId: Long,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
     require(streamId.nonEmpty, "need a stable stream id")
-    val hwm = currentManifest(path).flatMap(_.streamMarks).flatMap(_.get(streamId))
-    if (hwm.exists(_ >= batchId)) return -1L
-    var validatedChecks = activeChecks(path)
+    if (streamMark(currentManifest(path), streamId).exists(_ >= batchId)) return -1L
+    val validated = activeChecks(path)
     val staged = stageFiles(df, path, statsCols, None, bloomCols)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
-      // re-check under the current snapshot: a racing replay of the same
-      // batch may have committed while we staged
-      if (cur.flatMap(_.streamMarks).flatMap(_.get(streamId)).exists(_ >= batchId))
-        return -1L
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        enforceChecks(df, path, curChecks)
-        validatedChecks = curChecks
+    commitStreamBatch(path, streamId, batchId, df.schema, staged, validated,
+      enforceChecks(df, path, _))
+  }
+
+  private def streamMark(m: Option[Manifest], streamId: String): Option[Long] =
+    m.flatMap(_.streamMarks).flatMap(_.get(streamId))
+
+  /** The exactly-once commit shared by [[appendStream]] and
+    * [[commitStreamFiles]]: add `entries` and advance `streamId`'s mark
+    * to `batchId` in one commit — an empty batch still commits, because
+    * the mark must advance. A head whose mark already covers `batchId`
+    * means a replay of the same batch committed while we staged: the
+    * entries are deleted and -1 returns. */
+  private def commitStreamBatch(path: String, streamId: String, batchId: Long,
+      schema: StructType, entries: Seq[FileEntry], validated: Map[String, String],
+      revalidate: Map[String, String] => Unit): Long = {
+    var replayed = false
+    val v = commit(path, "stream_append", Rebase, validated, revalidate) { cur =>
+      replayed = streamMark(cur, streamId).exists(_ >= batchId)
+      if (replayed) None
+      else {
+        cur.foreach(m => require(sameSchema(m.schemaDdl, schema),
+          s"stream append schema mismatch vs '$path' v${m.version}"))
+        val marks = cur.flatMap(_.streamMarks).getOrElse(Map.empty) + (streamId -> batchId)
+        Some(Change(cur.map(_.files).getOrElse(Nil) ++ entries,
+          cur.flatMap(_.leaves).getOrElse(Nil), schema.toDDL,
+          ChangeLog(logEntries(entries), Nil), streamMarks = Some(Some(marks))))
       }
-      cur.foreach(m => require(sameSchema(m.schemaDdl, df.schema),
-        s"append schema mismatch vs '$path' v${m.version}"))
-      val marks = cur.flatMap(_.streamMarks).getOrElse(Map.empty) + (streamId -> batchId)
-      val (files, leaves) = packCommit(path,
-        cur.map(_.files).getOrElse(Nil) ++ staged,
-        cur.flatMap(_.leaves).getOrElse(Nil))
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L), commitTs(cur),
-        "stream_append", df.schema.toDDL, files, Some(marks), leaves,
-        Some(ChangeLog(logEntries(staged), Nil)), checks = cur.flatMap(_.checks), properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
     }
-    committed
+    if (!replayed) v
+    else { entries.foreach(fe => new File(path, fe.path).delete()); -1L }
   }
 
   /** EXACTLY-ONCE streaming commit of files ALREADY WRITTEN by
@@ -1359,13 +1445,12 @@ object GraftTable {
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
     require(streamId.nonEmpty, "need a stable stream id")
     def stagedDf = spark.read.schema(schema).parquet(staged.map(_.toString): _*)
-    def markOf(m: Option[Manifest]) = m.flatMap(_.streamMarks).flatMap(_.get(streamId))
-    if (markOf(currentManifest(path)).exists(_ >= batchId)) {
+    if (streamMark(currentManifest(path), streamId).exists(_ >= batchId)) {
       staged.foreach(_.delete()); return -1L
     }
-    var validatedChecks = activeChecks(path)
-    if (staged.nonEmpty && validatedChecks.nonEmpty)
-      try enforceChecks(stagedDf, path, validatedChecks)
+    val validated = activeChecks(path)
+    if (staged.nonEmpty && validated.nonEmpty)
+      try enforceChecks(stagedDf, path, validated)
       catch { case e: Throwable => staged.foreach(_.delete()); throw e }
     val entries =
       if (staged.isEmpty) Nil
@@ -1373,34 +1458,8 @@ object GraftTable {
         java.util.UUID.randomUUID.toString.take(8), staged, statsCols, bloomCols)
     def movedDf = spark.read.schema(schema).parquet(
       entries.map(fe => new File(path, fe.path).toString): _*)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
-      if (markOf(cur).exists(_ >= batchId)) {
-        // replay raced us after staging: the moved files are in data/
-        // but in no manifest — reclaim them now rather than waiting for
-        // vacuum
-        entries.foreach(fe => new File(path, fe.path).delete())
-        return -1L
-      }
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        if (entries.nonEmpty) enforceChecks(movedDf, path, curChecks)
-        validatedChecks = curChecks
-      }
-      cur.foreach(m => require(sameSchema(m.schemaDdl, schema),
-        s"streaming write schema mismatch vs '$path' v${m.version}"))
-      val marks = cur.flatMap(_.streamMarks).getOrElse(Map.empty) + (streamId -> batchId)
-      val (files, leaves) = packCommit(path,
-        cur.map(_.files).getOrElse(Nil) ++ entries,
-        cur.flatMap(_.leaves).getOrElse(Nil))
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L), commitTs(cur),
-        "stream_append", schema.toDDL, files, Some(marks), leaves,
-        Some(ChangeLog(logEntries(entries), Nil)), checks = cur.flatMap(_.checks),
-        properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
-    }
-    committed
+    commitStreamBatch(path, streamId, batchId, schema, entries, validated,
+      checks => if (entries.nonEmpty) enforceChecks(movedDf, path, checks))
   }
 
   /** The commit half of the DSv2 BATCH write
@@ -1418,11 +1477,10 @@ object GraftTable {
   private[graft] def commitBatchFiles(spark: SparkSession, path: String,
       stagedParts: Seq[File], schema: StructType, overwrite: Boolean,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
-    val op = if (overwrite) "overwrite" else "append"
-    var validatedChecks = activeChecks(path)
-    if (stagedParts.nonEmpty && validatedChecks.nonEmpty) {
+    val validated = activeChecks(path)
+    if (stagedParts.nonEmpty && validated.nonEmpty) {
       def stagedDf = spark.read.schema(schema).parquet(stagedParts.map(_.toString): _*)
-      try enforceChecks(stagedDf, path, validatedChecks)
+      try enforceChecks(stagedDf, path, validated)
       catch { case e: Throwable => stagedParts.foreach(_.delete()); throw e }
     }
     val staged =
@@ -1431,55 +1489,8 @@ object GraftTable {
         java.util.UUID.randomUUID.toString.take(8), stagedParts, statsCols, bloomCols)
     def movedDf = spark.read.schema(schema).parquet(
       staged.map(fe => new File(path, fe.path).toString): _*)
-    def reclaim(): Unit = staged.foreach(fe => new File(path, fe.path).delete())
-    betweenStageAndCommitForTests()
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        if (staged.nonEmpty)
-          try enforceChecks(movedDf, path, curChecks)
-          catch { case e: Throwable => reclaim(); throw e }
-        validatedChecks = curChecks
-      }
-      val (inline, parentLeaves) = op match {
-        case "overwrite" => (staged, Nil)
-        case _ =>
-          if (cur.isEmpty && tombstoned(path)) {
-            reclaim()
-            throw new IllegalStateException(
-              s"graft table '$path' was ${tombstoneReason(path)} — append aborted")
-          }
-          cur.foreach { m =>
-            if (!sameSchema(m.schemaDdl, schema)) {
-              reclaim()
-              throw new IllegalArgumentException(
-                s"append schema mismatch vs '$path' v${m.version}: table has " +
-                  s"[${m.schemaDdl}], append has [${schema.toDDL}] — overwrite to evolve")
-            }
-          }
-          (cur.map(_.files).getOrElse(Nil) ++ staged,
-            cur.flatMap(_.leaves).getOrElse(Nil))
-      }
-      val (files, leaves) = packCommit(path, inline, parentLeaves)
-      // same nullability discipline as writeOp: append keeps the table's
-      // declared schema, nullability only ever widens
-      val nextDdl = cur match {
-        case Some(m) if op == "append" =>
-          val batchNullable = schema.map(f => f.name -> f.nullable).toMap
-          StructType(StructType.fromDDL(m.schemaDdl).fields.map(f =>
-            f.copy(nullable = f.nullable ||
-              batchNullable.getOrElse(f.name, f.nullable)))).toDDL
-        case _ => schema.toDDL
-      }
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L),
-        commitTs(cur), op, nextDdl, files, cur.flatMap(_.streamMarks), leaves,
-        Some(ChangeLog(logEntries(staged), Nil, truncate = op == "overwrite")),
-        checks = cur.flatMap(_.checks), properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
-    }
-    committed
+    commitWrite(path, if (overwrite) "overwrite" else "append", schema, staged, validated,
+      checks => if (staged.nonEmpty) enforceChecks(movedDf, path, checks))
   }
 
   /** The commit half of a DSv2 GROUP-BASED row-level operation
@@ -1506,58 +1517,43 @@ object GraftTable {
     // under the old vector would silently resurrect concurrent deletes
     val removedDv: Map[String, Option[DvRef]] =
       removed.map(fe => fe.path -> fe.dv).toMap
-    var validatedChecks = activeChecks(path)
-    if (stagedParts.nonEmpty && validatedChecks.nonEmpty) {
+    val validated = activeChecks(path)
+    if (stagedParts.nonEmpty && validated.nonEmpty) {
       def stagedDf = spark.read.schema(schema).parquet(stagedParts.map(_.toString): _*)
-      try enforceChecks(stagedDf, path, validatedChecks)
+      try enforceChecks(stagedDf, path, validated)
       catch { case e: Throwable => stagedParts.foreach(_.delete()); throw e }
     }
     val entries =
       if (stagedParts.isEmpty) Nil
       else stagePartEntries(spark, schema, path,
         java.util.UUID.randomUUID.toString.take(8), stagedParts, Nil, Nil)
-    def reclaim(): Unit = entries.foreach(fe => new File(path, fe.path).delete())
     def movedDf = spark.read.schema(schema).parquet(
       entries.map(fe => new File(path, fe.path).toString): _*)
-    betweenStageAndCommitForTests()
-    try {
-      var committed = -1L
-      while (committed < 0) {
-        val cur = currentManifest(path).getOrElse(
-          throw new IllegalStateException(s"graft table '$path' vanished mid-operation"))
-        val curChecks = cur.checks.getOrElse(Map.empty)
-        if (curChecks != validatedChecks) {
-          if (entries.nonEmpty) enforceChecks(movedDf, path, curChecks)
-          validatedChecks = curChecks
-        }
-        val loaded = cur.leaves.getOrElse(Nil).map(l => l -> loadLeaf(path, l))
-        def isRemoved(fe: FileEntry) = removedKeys(fe.path)
-        val (tInline, uInline) = cur.files.partition(isRemoved)
-        val (dirtyLeaves, cleanLeaves) = loaded.partition(_._2.exists(isRemoved))
-        val removedNow = tInline ++ dirtyLeaves.flatMap(_._2).filter(isRemoved)
-        if (removedNow.map(_.path).toSet != removedKeys)
-          throw new java.util.ConcurrentModificationException(
-            s"row-level $op on '$path' lost a race: scanned file(s) were rewritten " +
-              "by a concurrent commit — re-run the statement")
-        // same-path-different-vector is just as stale as a rewrite: the
-        // operation read rows under the scan-time vector (applyDeltaCommit
-        // guards the identical hazard via pinnedDv)
-        removedNow.find(fe => removedDv.get(fe.path).exists(_ != fe.dv)).foreach { fe =>
-          throw new java.util.ConcurrentModificationException(
-            s"row-level $op on '$path' lost a race: scanned file '${fe.path}' was " +
-              "re-vectored by a concurrent commit — re-run the statement")
-        }
-        val survivors = dirtyLeaves.flatMap(_._2).filterNot(isRemoved)
-        val (files, leaves) = packCommit(path, uInline ++ survivors ++ entries,
-          cleanLeaves.map(_._1))
-        val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
-          cur.schemaDdl, files, cur.streamMarks, leaves,
-          Some(ChangeLog(logEntries(entries), logEntries(removedNow))),
-          checks = cur.checks, properties = cur.properties)
-        if (tryCommit(path, next)) committed = next.version
+    try commit(path, op, Rebase, validated,
+        checks => if (entries.nonEmpty) enforceChecks(movedDf, path, checks)) { head =>
+      val cur = head.getOrElse(
+        throw new IllegalStateException(s"graft table '$path' vanished mid-operation"))
+      val loaded = cur.leaves.getOrElse(Nil).map(l => l -> loadLeaf(path, l))
+      def isRemoved(fe: FileEntry) = removedKeys(fe.path)
+      val (tInline, uInline) = cur.files.partition(isRemoved)
+      val (dirtyLeaves, cleanLeaves) = loaded.partition(_._2.exists(isRemoved))
+      val removedNow = tInline ++ dirtyLeaves.flatMap(_._2).filter(isRemoved)
+      if (removedNow.map(_.path).toSet != removedKeys)
+        throw new java.util.ConcurrentModificationException(
+          s"row-level $op on '$path' lost a race: scanned file(s) were rewritten " +
+            "by a concurrent commit — re-run the statement")
+      // same-path-different-vector is just as stale as a rewrite: the
+      // operation read rows under the scan-time vector (applyDeltaCommit
+      // guards the identical hazard via pinnedDv)
+      removedNow.find(fe => removedDv.get(fe.path).exists(_ != fe.dv)).foreach { fe =>
+        throw new java.util.ConcurrentModificationException(
+          s"row-level $op on '$path' lost a race: scanned file '${fe.path}' was " +
+            "re-vectored by a concurrent commit — re-run the statement")
       }
-      committed
-    } catch { case e: Throwable => reclaim(); throw e }
+      val survivors = dirtyLeaves.flatMap(_._2).filterNot(isRemoved)
+      Some(Change(uInline ++ survivors ++ entries, cleanLeaves.map(_._1), cur.schemaDdl,
+        ChangeLog(logEntries(entries), logEntries(removedNow))))
+    } catch { case e: Throwable => entries.foreach(fe => new File(path, fe.path).delete()); throw e }
   }
 
   /** The commit half of a DSv2 DELTA-BASED (merge-on-read) row-level
@@ -1577,10 +1573,10 @@ object GraftTable {
   private[graft] def applyDeltaCommit(spark: SparkSession, path: String,
       pinned: Manifest, posParts: Seq[File], dataParts: Seq[File],
       schema: StructType, op: String): Long = {
-    var validatedChecks = activeChecks(path)
-    if (dataParts.nonEmpty && validatedChecks.nonEmpty) {
+    val validated = activeChecks(path)
+    if (dataParts.nonEmpty && validated.nonEmpty) {
       def stagedDf = spark.read.schema(schema).parquet(dataParts.map(_.toString): _*)
-      try enforceChecks(stagedDf, path, validatedChecks)
+      try enforceChecks(stagedDf, path, validated)
       catch { case e: Throwable =>
         (posParts ++ dataParts).foreach(_.delete()); throw e }
     }
@@ -1645,7 +1641,6 @@ object GraftTable {
         new File(new File(path, DvDir), dvName).delete() }
       posParts.foreach(_.delete())
     }
-    try {
     def touchedBy(fe: FileEntry) = merged.contains(fileUri(path, fe))
     def updatedEntry(fe: FileEntry): Option[FileEntry] = {
       val (dvName, total, bytes) = merged(fileUri(path, fe))
@@ -1657,19 +1652,15 @@ object GraftTable {
     val touched = tInline ++ liveLeaves2.flatMap(_._2).filter(touchedBy)
     val survivors = liveLeaves2.flatMap(_._2).filterNot(touchedBy)
     val updatedEntries = touched.flatMap(updatedEntry(_))
-    val (files, leaves) = packCommit(path,
-      uInline ++ survivors ++ updatedEntries ++ entries,
-      cleanLeaves.map(_._1))
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
-      cur.schemaDdl, files, cur.streamMarks, leaves,
-      Some(ChangeLog(logEntries(updatedEntries ++ entries), logEntries(touched))),
-      checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"commit v${next.version} of '$path' lost the race — re-run the $op")
-    posParts.foreach(_.delete())
-    next.version
+    def movedDf = spark.read.schema(schema).parquet(
+      entries.map(fe => new File(path, fe.path).toString): _*)
+    val v = try commit(path, op, Pinned(Some(cur)), validated,
+        checks => if (entries.nonEmpty) enforceChecks(movedDf, path, checks)) { _ =>
+      Some(Change(uInline ++ survivors ++ updatedEntries ++ entries, cleanLeaves.map(_._1),
+        cur.schemaDdl, ChangeLog(logEntries(updatedEntries ++ entries), logEntries(touched))))
     } catch { case e: Throwable => reclaim(); throw e }
+    posParts.foreach(_.delete())
+    v
   }
 
   /** Overwrite with a CLUSTERED layout: range-partition by `clusterBy`
@@ -2099,8 +2090,7 @@ object GraftTable {
   def updateWhere(spark: SparkSession, path: String, pred: Column, set: Map[String, Column],
       pruneRanges: Seq[ColRange] = Nil): Long = {
     require(set.nonEmpty, "UPDATE needs at least one assignment")
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     val missing = set.keySet -- schema.fieldNames.toSet
     require(missing.isEmpty, s"UPDATE assigns unknown column(s) ${missing.mkString(", ")} " +
@@ -2135,8 +2125,7 @@ object GraftTable {
     * surfaces `ConcurrentModificationException`; re-read and retry. */
   def deleteWhere(spark: SparkSession, path: String, pred: Column,
       pruneRanges: Seq[ColRange] = Nil): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     rewriteMatching(spark, path, pred, pruneRanges, cur, "delete",
       _.filter(!coalesce(pred, lit(false))), dropFullCover = true)
   }
@@ -2162,8 +2151,7 @@ object GraftTable {
     * surfaces `ConcurrentModificationException`; re-read and retry. */
   def overwriteWhere(spark: SparkSession, path: String, df: DataFrame, pred: Column,
       pruneRanges: Seq[ColRange] = Nil): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     val missing = schema.fieldNames.filterNot(df.columns.contains)
     require(missing.isEmpty,
@@ -2194,8 +2182,7 @@ object GraftTable {
     * form; purge/OPTIMIZE later folds the boundary vectors away. */
   def overwriteWhereMor(spark: SparkSession, path: String, df: DataFrame, pred: Column,
       pruneRanges: Seq[ColRange] = Nil): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     val missing = schema.fieldNames.filterNot(df.columns.contains)
     require(missing.isEmpty,
@@ -2259,8 +2246,7 @@ object GraftTable {
   def updateWhereMor(spark: SparkSession, path: String, pred: Column,
       set: Map[String, Column], pruneRanges: Seq[ColRange] = Nil): Long = {
     require(set.nonEmpty, "UPDATE needs at least one assignment")
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     val missing = set.keySet -- schema.fieldNames.toSet
     require(missing.isEmpty, s"UPDATE assigns unknown column(s) ${missing.mkString(", ")} " +
@@ -2293,8 +2279,7 @@ object GraftTable {
       updateWhen: Option[Column] = None, deleteWhen: Option[Column] = None,
       insertNotMatched: Boolean = true): Long = {
     require(keys.nonEmpty, "need at least one key column")
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     val missingKeys = keys.filterNot(source.columns.contains)
     require(missingKeys.isEmpty, s"source lacks key column(s) ${missingKeys.mkString(", ")}")
@@ -2366,8 +2351,7 @@ object GraftTable {
       matcher: DataFrame => DataFrame, pruneRanges: Seq[ColRange], op: String,
       replace: Option[DataFrame => DataFrame],
       extraAppend: Option[DataFrame => DataFrame] = None): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val logical = StructType.fromDDL(cur.schemaDdl)
     val reserved = Seq("_metadata", PosFileCol, PosIdxCol)
       .filter(logical.fieldNames.contains)
@@ -2443,16 +2427,10 @@ object GraftTable {
         (touched.flatMap(_.stats.keys) ++ candidates.flatMap(_.stats.keys)).distinct
       val staged = (images.toSeq ++ appended.toSeq).reduceOption(_ unionByName _)
         .map(df => stageFiles(df, path, statsCols, None)).getOrElse(Nil)
-      val (files, leaves) = packCommit(path,
-        untouched ++ updatedEntries ++ staged, carriedRefs)
-      val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
-        cur.schemaDdl, files, cur.streamMarks, leaves,
-        Some(ChangeLog(logEntries(updatedEntries ++ staged), logEntries(touched))),
-        checks = cur.checks, properties = cur.properties)
-      if (!tryCommit(path, next))
-        throw new java.util.ConcurrentModificationException(
-          s"commit v${next.version} of '$path' lost the race — re-read and retry the $op")
-      next.version
+      commit(path, op, Pinned(Some(cur))) { _ =>
+        Some(Change(untouched ++ updatedEntries ++ staged, carriedRefs, cur.schemaDdl,
+          ChangeLog(logEntries(updatedEntries ++ staged), logEntries(touched))))
+      }
     } finally if (matchedRows != null && replace.isDefined) matchedRows.unpersist(): Unit
   }
 
@@ -2518,15 +2496,10 @@ object GraftTable {
       cur.leaves.getOrElse(Nil).flatMap(_.stats.keys)).distinct
     val staged = rewritten ++ extraStage.map(df =>
       stageFiles(df, path, tableStatsCols, None)).getOrElse(Nil)
-    val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged,
-      cleanLeaves ++ carriedLive.map(_._1))
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
-      cur.schemaDdl, files, cur.streamMarks, leaves,
-      Some(ChangeLog(logEntries(staged), logEntries(touched))), checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"commit v${next.version} of '$path' lost the race — re-read and retry the $op")
-    next.version
+    commit(path, op, Pinned(Some(cur))) { _ =>
+      Some(Change(inUntouched ++ survivors ++ staged, cleanLeaves ++ carriedLive.map(_._1),
+        cur.schemaDdl, ChangeLog(logEntries(staged), logEntries(touched))))
+    }
   }
 
   // ---------------------------------------------------------------- upsert
@@ -2562,8 +2535,7 @@ object GraftTable {
   def deleteByKey(spark: SparkSession, path: String, delKeys: DataFrame,
       keys: Seq[String]): Long = {
     require(keys.nonEmpty, "need at least one key column")
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val missing = keys.filterNot(delKeys.columns.contains)
     require(missing.isEmpty, s"delete-key frame lacks ${missing.mkString(", ")}")
     cowMerge(spark, path, delKeys.select(keys.map(col): _*), None, keys, Nil, cur,
@@ -2695,16 +2667,12 @@ object GraftTable {
       // or no-match change set) commits nothing
       val staged = if (touched.isEmpty && replacement.isEmpty) Nil
         else stageFiles(rewritten, path, statsCols, None)
-      if (touched.isEmpty && staged.isEmpty) return cur.version
-      val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged,
-        cleanLeaves ++ carriedLive.map(_._1))
-      val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
-        cur.schemaDdl, files, cur.streamMarks, leaves,
-        Some(ChangeLog(logEntries(staged), logEntries(touched))), checks = cur.checks, properties = cur.properties)
-      if (!tryCommit(path, next))
-        throw new java.util.ConcurrentModificationException(
-          s"commit v${next.version} of '$path' lost the race — re-read and retry the $op")
-      next.version
+      commit(path, op, Pinned(Some(cur))) { _ =>
+        if (touched.isEmpty && staged.isEmpty) None
+        else Some(Change(inUntouched ++ survivors ++ staged,
+          cleanLeaves ++ carriedLive.map(_._1), cur.schemaDdl,
+          ChangeLog(logEntries(staged), logEntries(touched))))
+      }
     } finally d.unpersist(): Unit
   }
 
@@ -2720,8 +2688,7 @@ object GraftTable {
     * Historical versions keep their own schema — time travel reads the
     * OLD name before the rename commit, by construction. */
   def renameColumn(path: String, from: String, to: String): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     require(schema.fieldNames.contains(from), s"no column '$from' in [${cur.schemaDdl}]")
     require(!schema.fieldNames.contains(to), s"column '$to' already exists")
@@ -2738,15 +2705,11 @@ object GraftTable {
         stats = fe.stats.map { case (k, v) => (if (k == from) to else k) -> v },
         renames = if (next.isEmpty) None else Some(next))
     }
-    val (files, leaves) = packCommit(path, mapped, Nil)
     // metadata-only: file contents unchanged, so the change log is empty
     // (chain diffs across a schema op fall back on the DDL check anyway)
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), "rename", newDdl,
-      files, cur.streamMarks, leaves, Some(ChangeLog(Nil, Nil)), checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"rename on '$path' lost the commit race — retry")
-    next.version
+    commit(path, "rename", Pinned(Some(cur))) { _ =>
+      Some(Change(mapped, Nil, newDdl, ChangeLog(Nil, Nil)))
+    }
   }
 
   /** METADATA-ONLY column add — zero data IO, like [[renameColumn]].
@@ -2760,8 +2723,7 @@ object GraftTable {
     * for. Historical versions keep their old schema (time travel before
     * the add does not see the column). */
   def addColumn(path: String, name: String, ddlType: String): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     require(!schema.fieldNames.exists(_.equalsIgnoreCase(name)),
       s"column '$name' already exists in [${cur.schemaDdl}]")
@@ -2771,13 +2733,9 @@ object GraftTable {
     val mapped = filesOf(path, cur).map { fe =>
       fe.copy(renames = Some(fe.renames.getOrElse(Map.empty) + (name -> absent)))
     }
-    val (files, leaves) = packCommit(path, mapped, Nil)
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), "add_column", newDdl,
-      files, cur.streamMarks, leaves, Some(ChangeLog(Nil, Nil)), checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"add_column on '$path' lost the commit race — retry")
-    next.version
+    commit(path, "add_column", Pinned(Some(cur))) { _ =>
+      Some(Change(mapped, Nil, newDdl, ChangeLog(Nil, Nil)))
+    }
   }
 
   /** METADATA-ONLY column drop: the logical schema loses the field;
@@ -2789,8 +2747,7 @@ object GraftTable {
     * yield nothing for the name, so a stale-stats skip can only skip
     * files whose surviving values could not match anyway. */
   def dropColumn(path: String, name: String): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     require(schema.fieldNames.contains(name), s"no column '$name' in [${cur.schemaDdl}]")
     require(schema.fields.length > 1, s"cannot drop the last column of '$path'")
@@ -2799,13 +2756,9 @@ object GraftTable {
       val next = fe.renames.getOrElse(Map.empty) - name
       fe.copy(renames = if (next.isEmpty) None else Some(next))
     }
-    val (files, leaves) = packCommit(path, mapped, Nil)
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), "drop_column", newDdl,
-      files, cur.streamMarks, leaves, Some(ChangeLog(Nil, Nil)), checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"drop_column on '$path' lost the commit race — retry")
-    next.version
+    commit(path, "drop_column", Pinned(Some(cur))) { _ =>
+      Some(Change(mapped, Nil, newDdl, ChangeLog(Nil, Nil)))
+    }
   }
 
   // ------------------------------------------------------ CHECK constraints
@@ -2823,50 +2776,35 @@ object GraftTable {
   def addCheck(spark: SparkSession, path: String, name: String, sqlExpr: String): Long = {
     require(name.nonEmpty, "check needs a name")
     expr(sqlExpr) // parse errors surface here, before any commit attempt
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path).getOrElse(
-        throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    // a lost race re-validates against the new head
+    commit(path, "add_check", Rebase) { head =>
+      val cur = existing(path, head)
       require(!cur.checks.exists(_.contains(name)),
         s"check '$name' already exists on '$path'")
       val bad = readManifest(spark, path, cur)
         .filter(expr(sqlExpr) <=> lit(false)).limit(1).count()
       require(bad == 0,
         s"existing rows of '$path' violate CHECK $name [$sqlExpr] — clean the data first")
-      val next = Manifest(cur.version + 1, commitTs(Some(cur)), "add_check",
-        cur.schemaDdl, cur.files, cur.streamMarks, cur.leaves, Some(ChangeLog(Nil, Nil)),
-        checks = Some(cur.checks.getOrElse(Map.empty) + (name -> sqlExpr)),
-        properties = cur.properties)
-      if (tryCommit(path, next)) committed = next.version
-      // else: lost the race — re-validate against the new head and retry
+      Some(metadataOnly(cur).copy(
+        checks = Some(Some(cur.checks.getOrElse(Map.empty) + (name -> sqlExpr)))))
     }
-    committed
   }
 
   /** The active CHECK constraints as a relation (name, expression) —
     * the DESCRIBE surface for [[addCheck]], manifest metadata alone. */
   def describeChecks(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val m = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val m = headOf(path)
     m.checks.getOrElse(Map.empty).toSeq.sortBy(_._1).toDF("name", "expr")
   }
 
   /** Remove a CHECK constraint (a metadata-only commit). */
-  def dropCheck(path: String, name: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path).getOrElse(
-        throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+  def dropCheck(path: String, name: String): Long =
+    commit(path, "drop_check", Rebase) { head =>
+      val cur = existing(path, head)
       require(cur.checks.exists(_.contains(name)), s"no check '$name' on '$path'")
-      val next = Manifest(cur.version + 1, commitTs(Some(cur)), "drop_check",
-        cur.schemaDdl, cur.files, cur.streamMarks, cur.leaves, Some(ChangeLog(Nil, Nil)),
-        checks = cur.checks.map(_ - name).filter(_.nonEmpty),
-        properties = cur.properties)
-      if (tryCommit(path, next)) committed = next.version
+      Some(metadataOnly(cur).copy(checks = Some(cur.checks.map(_ - name).filter(_.nonEmpty))))
     }
-    committed
-  }
 
   // ---------------------------------------------------------------- analyze
 
@@ -2896,10 +2834,8 @@ object GraftTable {
       case p => p.split('/').last
     }
     val cache = scala.collection.mutable.Map.empty[String, Map[String, ColStats]]
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path).getOrElse(
-        throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    commit(path, "analyze", Rebase) { head =>
+      val cur = existing(path, head)
       val logical = StructType.fromDDL(cur.schemaDdl)
       val fields = want.map { c =>
         require(logical.fieldNames.contains(c), s"no column '$c' in [${cur.schemaDdl}]")
@@ -2913,7 +2849,6 @@ object GraftTable {
         cols.exists(c => !fe.stats.contains(c)) ||
           bloomCols.exists(c => !fe.stats.get(c).exists(_.bloom.isDefined))
       val todo = live.filter(needsWork)
-      if (todo.isEmpty) return cur.version
       val missing = todo.filterNot(fe => cache.contains(fe.path.split('/').last))
       if (missing.nonEmpty) {
         val mBits = bloomBits(missing.map(_.rows).maxOption.getOrElse(0L))
@@ -2972,13 +2907,9 @@ object GraftTable {
           case (k, v) => k -> v.copy(bloom = v.bloom.orElse(fe.stats.get(k).flatMap(_.bloom)))
         })
       }
-      val (files, leaves) = packCommit(path, merged, Nil)
-      val next = Manifest(cur.version + 1, commitTs(Some(cur)), "analyze",
-        cur.schemaDdl, files, cur.streamMarks, leaves, Some(ChangeLog(Nil, Nil)),
-        checks = cur.checks, properties = cur.properties)
-      if (tryCommit(path, next)) committed = next.version
+      if (todo.isEmpty) None
+      else Some(Change(merged, Nil, cur.schemaDdl, ChangeLog(Nil, Nil)))
     }
-    committed
   }
 
   // ---------------------------------------------------------------- convert
@@ -3035,11 +2966,10 @@ object GraftTable {
         case None => FileEntry(p.getName, 0L, p.length, Map.empty)
       }
     }.toSeq
-    val (files, leaves) = packCommit(dir, entries, Nil)
-    val m = Manifest(1L, commitTs(None), "convert", df.schema.toDDL, files, None,
-      leaves, Some(ChangeLog(logEntries(entries), Nil, truncate = true)))
-    require(tryCommit(dir, m), s"convert of '$dir' lost a creation race")
-    1L
+    commit(dir, "convert", Pinned(None)) { _ =>
+      Some(Change(entries, Nil, df.schema.toDDL,
+        ChangeLog(logEntries(entries), Nil, truncate = true)))
+    }
   }
 
   // ------------------------------------------------------------- MERGE INTO
@@ -3074,8 +3004,7 @@ object GraftTable {
       deleteWhen: Option[Column] = None, insertNotMatched: Boolean = true,
       statsCols: Seq[String] = Nil): Long = {
     require(keys.nonEmpty, "need at least one key column")
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     val missingKeys = keys.filterNot(source.columns.contains)
     require(missingKeys.isEmpty, s"source lacks key column(s) ${missingKeys.mkString(", ")}")
@@ -3139,21 +3068,6 @@ object GraftTable {
 
   // ---------------------------------------------------------------- restore
 
-  /** RESTORE the table to the content of `version` (Delta's
-    * `RESTORE TABLE … TO VERSION AS OF`, re-derived) — the write-side
-    * completion of the time-travel triad (read a version, diff versions,
-    * ROLL BACK to one). A metadata-only commit: the new head carries
-    * version N's file list, leaves, schema, and CHECK constraints
-    * verbatim — zero data IO, history PRESERVED (the bad commits stay
-    * time-travel-readable; nothing is rewritten), and the change log
-    * records the rollback as O(changed files) adds/removes, so CDC
-    * consumers see the restore as an explicit data change (the streaming
-    * source rightly refuses it without `ignoreChanges` — a rollback IS
-    * a rewrite). Stream high-water marks do NOT roll back: the
-    * exactly-once ledger must be monotone or replayed batches would
-    * double-apply. Requires `version`'s manifest (and its files) to
-    * still be retained — restore past a vacuum horizon refuses at
-    * [[manifestAt]]. */
   /** TRUNCATE: empty the table in one METADATA-ONLY commit — no file
     * is read, rewritten, or deleted (the old snapshot stays fully
     * time-travelable until [[vacuum]] retires it; vacuum then reclaims
@@ -3166,16 +3080,10 @@ object GraftTable {
     * delete-all would pay a full probe, a MOR delete-all would write
     * vectors for every file; truncate costs one manifest. */
   def truncate(path: String): Long = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), "truncate",
-      cur.schemaDdl, Nil, cur.streamMarks, None,
-      Some(ChangeLog(Nil, Nil, truncate = true)),
-      checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"commit v${next.version} of '$path' lost the race — re-read and retry the truncate")
-    next.version
+    val cur = headOf(path)
+    commit(path, "truncate", Pinned(Some(cur))) { _ =>
+      Some(Change(Nil, Nil, cur.schemaDdl, ChangeLog(Nil, Nil, truncate = true)))
+    }
   }
 
   /** The commit half of ATOMIC `REPLACE TABLE … AS SELECT` through the
@@ -3195,8 +3103,7 @@ object GraftTable {
     * caller to discard. If the target does not exist the commit creates
     * v1 (`CREATE OR REPLACE` on a fresh name). */
   private[graft] def replaceFrom(targetPath: String, stagedPath: String): Long = {
-    val staged = currentManifest(stagedPath).getOrElse(
-      throw new IllegalArgumentException(s"'$stagedPath' is not a GraftTable"))
+    val staged = headOf(stagedPath)
     val entries = filesOf(stagedPath, staged)
     require(entries.forall(fe => fe.dv.isEmpty && fe.renames.isEmpty),
       s"staged table '$stagedPath' carries deletion vectors or column renames — " +
@@ -3206,45 +3113,50 @@ object GraftTable {
       Files.move(new File(stagedPath, fe.path).toPath,
         new File(targetPath, fe.path).toPath): Unit
     }
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(targetPath)
-      val (files, leaves) = packCommit(targetPath, entries, Nil)
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L), commitTs(cur),
-        "replace_table", staged.schemaDdl, files, cur.flatMap(_.streamMarks), leaves,
-        Some(ChangeLog(logEntries(entries), Nil, truncate = true)),
-        checks = staged.checks, properties = staged.properties)
-      if (tryCommit(targetPath, next)) committed = next.version
+    commit(targetPath, "replace_table", Rebase) { _ =>
+      Some(Change(entries, Nil, staged.schemaDdl,
+        ChangeLog(logEntries(entries), Nil, truncate = true),
+        checks = Some(staged.checks), properties = Some(staged.properties)))
     }
-    committed
   }
 
-  def restore(path: String, version: Long): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path).getOrElse(
-        throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+  /** RESTORE the table to the content of `version` (Delta's
+    * `RESTORE TABLE … TO VERSION AS OF`, re-derived) — the write-side
+    * completion of the time-travel triad (read a version, diff versions,
+    * ROLL BACK to one). A metadata-only commit: the new head carries
+    * version N's file list, leaves, schema, and CHECK constraints
+    * verbatim — zero data IO, history PRESERVED (the bad commits stay
+    * time-travel-readable; nothing is rewritten), and the change log
+    * records the rollback as O(changed files) adds/removes, so CDC
+    * consumers see the restore as an explicit data change (the streaming
+    * source rightly refuses it without `ignoreChanges` — a rollback IS
+    * a rewrite). Stream high-water marks do NOT roll back: the
+    * exactly-once ledger must be monotone or replayed batches would
+    * double-apply. Requires `version`'s manifest (and its files) to
+    * still be retained — restore past a vacuum horizon refuses at
+    * [[manifestAt]]. */
+  def restore(path: String, version: Long): Long =
+    commit(path, "restore", Rebase) { head =>
+      val cur = existing(path, head)
       require(version <= cur.version, s"cannot restore '$path' to future v$version")
-      if (version == cur.version) return cur.version // no-op
-      val old = manifestAt(path, version)
-      val oldFiles = filesOf(path, old)
-      val curFiles = filesOf(path, cur)
-      // (path, dv) identity: rolling back across a MOR delete keeps the
-      // data file but swaps its vector — that IS a data change, and the
-      // log must record it (remove current-dv entry, add old-dv entry)
-      // or CDC consumers would never see the un-deleted rows
-      def ident(fe: FileEntry) = (fe.path, fe.dv.map(_.path))
-      val curIds = curFiles.map(ident).toSet
-      val oldIds = oldFiles.map(ident).toSet
-      val next = Manifest(cur.version + 1, commitTs(Some(cur)), "restore",
-        old.schemaDdl, old.files, cur.streamMarks, old.leaves,
-        Some(ChangeLog(logEntries(oldFiles.filterNot(fe => curIds(ident(fe)))),
-          logEntries(curFiles.filterNot(fe => oldIds(ident(fe)))))),
-        checks = old.checks, properties = cur.properties)
-      if (tryCommit(path, next)) committed = next.version
+      if (version == cur.version) None // no-op
+      else {
+        val old = manifestAt(path, version)
+        val oldFiles = filesOf(path, old)
+        val curFiles = filesOf(path, cur)
+        // (path, dv) identity: rolling back across a MOR delete keeps the
+        // data file but swaps its vector — that IS a data change, and the
+        // log must record it (remove current-dv entry, add old-dv entry)
+        // or CDC consumers would never see the un-deleted rows
+        def ident(fe: FileEntry) = (fe.path, fe.dv.map(_.path))
+        val curIds = curFiles.map(ident).toSet
+        val oldIds = oldFiles.map(ident).toSet
+        Some(Change(old.files, old.leaves.getOrElse(Nil), old.schemaDdl,
+          ChangeLog(logEntries(oldFiles.filterNot(fe => curIds(ident(fe)))),
+            logEntries(curFiles.filterNot(fe => oldIds(ident(fe))))),
+          checks = Some(old.checks)))
+      }
     }
-    committed
-  }
 
   // ------------------------------------------------------------------ clone
 
@@ -3272,8 +3184,7 @@ object GraftTable {
     * behind (the clone is a new stream target). */
   def cloneTable(spark: SparkSession, srcPath: String, dstPath: String,
       deep: Boolean = false): Long = {
-    val src = currentManifest(srcPath).getOrElse(
-      throw new IllegalArgumentException(s"'$srcPath' is not a GraftTable"))
+    val src = headOf(srcPath)
     require(currentManifest(dstPath).isEmpty, s"clone target '$dstPath' already exists")
     val entries = filesOf(srcPath, src)
     val cloned =
@@ -3298,12 +3209,11 @@ object GraftTable {
           fe.copy(path = s"$DataDir/${from.getName}", dv = dvCopied)
         }
       }
-    val (files, leaves) = packCommit(dstPath, cloned, Nil)
-    val m = Manifest(1L, commitTs(None), if (deep) "clone_deep" else "clone",
-      src.schemaDdl, files, None, leaves,
-      Some(ChangeLog(logEntries(cloned), Nil, truncate = true)), checks = src.checks, properties = src.properties)
-    require(tryCommit(dstPath, m), s"clone of '$srcPath' lost a creation race at '$dstPath'")
-    1L
+    commit(dstPath, if (deep) "clone_deep" else "clone", Pinned(None)) { _ =>
+      Some(Change(cloned, Nil, src.schemaDdl,
+        ChangeLog(logEntries(cloned), Nil, truncate = true),
+        checks = Some(src.checks), properties = Some(src.properties)))
+    }
   }
 
   // ----------------------------------------------------------- diff / CDC
@@ -3470,8 +3380,7 @@ object GraftTable {
     * or use [[diffVersions]] for row-level change semantics. Returns
     * (new rows, current version to bookmark). */
   def readSince(spark: SparkSession, path: String, sinceVersion: Long): (DataFrame, Long) = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val since = manifestAt(path, sinceVersion)
     val fresh = chainChanges(path, since.schemaDdl, sinceVersion, cur.version) match {
       case Some((addedNet, _)) => addedNet
@@ -3489,17 +3398,12 @@ object GraftTable {
 
   /** Advance `id`'s bookmark in `path`'s marks ledger as its own tiny
     * commit (op `sync_mark`, file list carried verbatim). */
-  private def setMark(path: String, id: String, value: Long): Unit = {
-    var done = false
-    while (!done) {
-      val cur = currentManifest(path).getOrElse(
-        throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
-      val marks = cur.streamMarks.getOrElse(Map.empty) + (id -> value)
-      done = tryCommit(path, Manifest(cur.version + 1, commitTs(Some(cur)),
-        "sync_mark", cur.schemaDdl, cur.files, Some(marks), cur.leaves,
-        Some(ChangeLog(Nil, Nil)), checks = cur.checks, properties = cur.properties))
-    }
-  }
+  private def setMark(path: String, id: String, value: Long): Unit =
+    commit(path, "sync_mark", Rebase) { head =>
+      val cur = existing(path, head)
+      Some(metadataOnly(cur).copy(
+        streamMarks = Some(Some(cur.streamMarks.getOrElse(Map.empty) + (id -> value)))))
+    }: Unit
 
   /** Incremental CDC replication: bring the GraftTable at `dstPath` up to
     * date with `srcPath`'s current snapshot by applying only the CHANGES
@@ -3557,8 +3461,7 @@ object GraftTable {
       case Some(v) =>
         // bring the replica's schema to the head's first — metadata-only
         // commits, zero data IO — so the keyed apply sees matching schemas
-        val dstSchema = StructType.fromDDL(currentManifest(dstPath).getOrElse(
-          throw new IllegalArgumentException(s"'$dstPath' is not a GraftTable")).schemaDdl)
+        val dstSchema = StructType.fromDDL(headOf(dstPath).schemaDdl)
         headSchema.fields.filterNot(f => dstSchema.fieldNames.contains(f.name))
           .foreach(f => addColumn(dstPath, f.name, f.dataType.sql): Unit)
         val changes = diffVersions(spark, srcPath, v, srcV, keys).persist()
@@ -3618,8 +3521,7 @@ object GraftTable {
       targetBytes: Long = 128L << 20, statsCols: Seq[String] = Nil,
       clusterBy: Option[Column] = None, where: Seq[ColRange] = Nil): (Int, Int) = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     // clustering is a whole-window relayout (a carried unclustered file
     // inside the window would poison the range order); plain bin-packing
     // repacks small files only
@@ -3633,24 +3535,24 @@ object GraftTable {
         val (s, b) = inWindow.partition(_.bytes < targetBytes)
         (s, b ++ outside)
     }
-    if (small.isEmpty || (small.size <= 1 && clusterBy.isEmpty))
-      return (allFiles.size, allFiles.size)
-    val nOut = math.max(1, math.ceil(small.map(_.bytes).sum.toDouble / targetBytes).toInt)
-    // compaction rewrites under the CURRENT logical schema, so packed
-    // files shed any rename indirection; carried files keep theirs
-    val packed = clusterBy match {
-      case Some(_) => readFileSubset(spark, path, cur, small)
-      case None => readFileSubset(spark, path, cur, small).repartition(nOut)
-    }
-    val staged = stageFiles(packed, path, statsCols, clusterBy.map(c => (c, nOut)))
-    val (files, leaves) = packCommit(path, big ++ staged, Nil)
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), "compact",
-      cur.schemaDdl, files, cur.streamMarks, leaves,
-      Some(ChangeLog(logEntries(staged), logEntries(small))), checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"compaction of '$path' lost the commit race — retry when quiesced")
-    (allFiles.size, totalFiles(next))
+    var after = allFiles.size
+    commit(path, "compact", Pinned(Some(cur))) { _ =>
+      if (small.isEmpty || (small.size <= 1 && clusterBy.isEmpty)) None
+      else {
+        val nOut = math.max(1, math.ceil(small.map(_.bytes).sum.toDouble / targetBytes).toInt)
+        // compaction rewrites under the CURRENT logical schema, so packed
+        // files shed any rename indirection; carried files keep theirs
+        val packed = clusterBy match {
+          case Some(_) => readFileSubset(spark, path, cur, small)
+          case None => readFileSubset(spark, path, cur, small).repartition(nOut)
+        }
+        val staged = stageFiles(packed, path, statsCols, clusterBy.map(c => (c, nOut)))
+        after = big.size + staged.size
+        Some(Change(big ++ staged, Nil, cur.schemaDdl,
+          ChangeLog(logEntries(staged), logEntries(small))))
+      }
+    }: Unit
+    (allFiles.size, after)
   }
 
   /** Fold every live deletion vector into a rewrite (Delta's
@@ -3667,25 +3569,22 @@ object GraftTable {
     * the table has no vectors (no commit at all). */
   def purgeDeletes(spark: SparkSession, path: String,
       statsCols: Seq[String] = Nil): (Int, Long) = {
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val (dirtyRefs, cleanRefs) = cur.leaves.getOrElse(Nil).partition(_.dvRows > 0)
     val loaded = dirtyRefs.map(l => loadLeaf(path, l))
     val (inTouched, inUntouched) = cur.files.partition(_.dv.isDefined)
     val (leafTouched, survivors) = loaded.flatten.partition(_.dv.isDefined)
     val touched = inTouched ++ leafTouched
-    if (touched.isEmpty) return (0, cur.version)
-    val cols = if (statsCols.nonEmpty) statsCols
-      else touched.flatMap(_.stats.keys).distinct
-    val staged = stageFiles(readFileSubset(spark, path, cur, touched), path, cols, None)
-    val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged, cleanRefs)
-    val next = Manifest(cur.version + 1, commitTs(Some(cur)), "purge_dv",
-      cur.schemaDdl, files, cur.streamMarks, leaves,
-      Some(ChangeLog(logEntries(staged), logEntries(touched))), checks = cur.checks, properties = cur.properties)
-    if (!tryCommit(path, next))
-      throw new java.util.ConcurrentModificationException(
-        s"purge of '$path' lost the commit race — retry when quiesced")
-    (touched.size, next.version)
+    (touched.size, commit(path, "purge_dv", Pinned(Some(cur))) { _ =>
+      if (touched.isEmpty) None
+      else {
+        val cols = if (statsCols.nonEmpty) statsCols
+          else touched.flatMap(_.stats.keys).distinct
+        val staged = stageFiles(readFileSubset(spark, path, cur, touched), path, cols, None)
+        Some(Change(inUntouched ++ survivors ++ staged, cleanRefs, cur.schemaDdl,
+          ChangeLog(logEntries(staged), logEntries(touched))))
+      }
+    })
   }
 
   /** The default stats-column selection for `path`'s current schema plus
@@ -3693,8 +3592,7 @@ object GraftTable {
     * keep file stats even past the [[DefaultStatsCols]] cap, or the
     * relayout would tighten per-file ranges that nobody records. */
   private[graft] def statsColsPlus(path: String, extra: Seq[String]): Seq[String] = {
-    val schema = StructType.fromDDL(currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable")).schemaDdl)
+    val schema = StructType.fromDDL(headOf(path).schemaDdl)
     val base = resolveStatsCols(schema, Nil).map(_.name)
     base ++ extra.filterNot(base.contains)
   }
@@ -3716,8 +3614,7 @@ object GraftTable {
       cols: Seq[String]): Column = {
     require(cols.size >= 2, "interleave needs at least 2 columns")
     require(cols.distinct.size == cols.size, s"duplicate ZORDER column in $cols")
-    val cur = currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    val cur = headOf(path)
     val schema = StructType.fromDDL(cur.schemaDdl)
     val bits = math.max(1, math.min(16, 63 / cols.size))
     val tagged = cols.map { c =>
@@ -3795,8 +3692,7 @@ object GraftTable {
     * (configuration is not data; Delta draws the same line), clones
     * inherit the source's. */
   def propertiesOf(path: String): Map[String, String] =
-    currentManifest(path).getOrElse(
-      throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
+    headOf(path)
       .properties.getOrElse(Map.empty)
 
   /** Merge `props` into the table's properties (one rebasing
@@ -3819,20 +3715,12 @@ object GraftTable {
     commitProperties(path, cur => cur -- keys)
   }
 
-  private def commitProperties(path: String, f: Map[String, String] => Map[String, String]): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path).getOrElse(
-        throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
-      val next = f(cur.properties.getOrElse(Map.empty))
-      val m = Manifest(cur.version + 1, commitTs(Some(cur)), "set_properties",
-        cur.schemaDdl, cur.files, cur.streamMarks, cur.leaves,
-        Some(ChangeLog(Nil, Nil)), checks = cur.checks,
-        properties = if (next.isEmpty) None else Some(next))
-      if (tryCommit(path, m)) committed = m.version
+  private def commitProperties(path: String, f: Map[String, String] => Map[String, String]): Long =
+    commit(path, "set_properties", Rebase) { head =>
+      val cur = existing(path, head)
+      Some(metadataOnly(cur).copy(properties =
+        Some(Some(f(cur.properties.getOrElse(Map.empty))).filter(_.nonEmpty))))
     }
-    committed
-  }
 
   /** SHOW TBLPROPERTIES as a relation: (key, value), sorted. */
   def describeProperties(spark: SparkSession, path: String): DataFrame = {

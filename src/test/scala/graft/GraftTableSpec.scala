@@ -1095,6 +1095,8 @@ class GraftTableSpec extends AnyFunSuite with SparkSpecBase {
     assert(GraftTable.applyChangeSet(spark, path, df("k INT"), kv(), Seq("k")) == 1L)
     GraftTable.applyChangeSet(spark, path, df("k INT", Row(Int.box(99))), kv(), Seq("k")): Unit
     GraftTable.deleteByKey(spark, path, df("k INT", Row(Int.box(99))), Seq("k")): Unit
+    assert(GraftTable.append(kv(), path) == 1L)
+    assert(GraftTable.commitBatchFiles(spark, path, Nil, kv().schema, overwrite = false) == 1L)
     assert(state == before)
     assert(GraftTable.currentManifest(path).get.files.forall(_.rows > 0))
     assert(canon(GraftTable.read(spark, path)) == canon(kv(1 -> "a", 2 -> "b")))
